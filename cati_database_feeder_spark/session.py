@@ -15,11 +15,12 @@ import os
 
 from pyspark.sql import SparkSession
 
-# Defaults are for the local[32] test harness; on a real cluster the
+# Local defaults use SPARK_GRAFT_CPUS, else the CPUs this process may
+# run on (its affinity mask, not the host's count); on a real cluster the
 # submitter overrides master/shuffle-partitions (rule of thumb: 2-3x
 # total executor cores, or rely on AQE coalescing from a high initial
 # number).
-DEFAULT_CPUS = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
+DEFAULT_CPUS = int(os.environ.get("SPARK_GRAFT_CPUS") or len(os.sched_getaffinity(0)))
 
 
 def get_session(app_name: str = "cati-feeder-spark", master: str | None = None,

@@ -14,11 +14,11 @@ Engine shape:
   append, then one server-side ``MERGE`` (generated here, executed over
   a caller-supplied DB-API connection). At 100 TB of updates the
   staging write is the parallel part and the MERGE is a single set
-  operation in the target DB — never per-row UPDATE over the wire.
+  operation in the target DB — never per-row UPDATE over the wire. The
+  default stage (DuckDB) is one capped Arrow collect copied by one
+  ``CREATE TABLE … AS SELECT``: staged types are the Arrow schema's.
 
-No live Postgres exists in this container, so tests validate the SQL
-generation and option plumbing; the write paths are exercised against
-DuckDB through its DB-API connection in tests/test_sinks.py.
+tests/test_sinks.py runs the write paths on DuckDB and embedded Derby.
 """
 
 from __future__ import annotations
@@ -103,33 +103,42 @@ def merge_upsert(df: DataFrame, connection, target: str, key_cols: list[str],
 
     ``connection`` is any DB-API connection to the target database (the
     driver holds exactly one, for the single MERGE statement — all bulk
-    data moves through the staging append). ``write_staging`` defaults
-    to a local materialization for test backends without JDBC
-    endpoints; production passes ``lambda d, t: jdbc_append(d, url, t)``.
+    data moves through the staging write). Production passes
+    ``write_staging=lambda d, t: jdbc_append(d, url, t)``. The default
+    needs DuckDB's ``connection.register``: one ``toArrow()`` collect of
+    at most ``_MAX_LOCAL_STAGING_ROWS`` rows (more raises before any DDL)
+    becomes a real ``staging`` table by one ``CREATE … AS SELECT``. Only
+    top-level TIMESTAMPs stage as plain TIMESTAMP (session wall clock).
     ``dialect="update_insert"`` picks the pre-MERGE two-statement form.
     Returns the SQL statements it executed.
     """
-    cols = df.columns
     if write_staging is None:
+        if not hasattr(connection, "register"):
+            raise TypeError(f"{type(connection).__name__} has no register() for the default "
+                            "Arrow staging; pass write_staging=lambda d, t: jdbc_append(d, url, t)")
+
         def write_staging(d: DataFrame, table_name: str) -> None:
-            # driver-side materialization is TEST-SCALE ONLY: hard-capped
-            # so a production-size frame fails fast with the right fix
-            # instead of OOMing the driver
-            rows = [tuple(r) for r in d.limit(_MAX_LOCAL_STAGING_ROWS + 1).collect()]
-            if len(rows) > _MAX_LOCAL_STAGING_ROWS:
+            # tz-aware Arrow timestamps stage as TIMESTAMPTZ, shifted by DuckDB's TimeZone
+            d = d.withColumns({c: d[c].cast("timestamp_ntz")
+                               for c, t in d.dtypes if t == "timestamp"})
+            # driver-side materialization is TEST-SCALE ONLY: hard-capped so a
+            # production-size frame fails fast with the right fix, not a driver OOM
+            table = d.limit(_MAX_LOCAL_STAGING_ROWS + 1).toArrow()
+            if table.num_rows > _MAX_LOCAL_STAGING_ROWS:
                 raise ValueError(
                     f"default staging write collects to the driver and is capped at "
-                    f"{_MAX_LOCAL_STAGING_ROWS} rows; pass "
-                    f"write_staging=lambda d, t: jdbc_append(d, url, t) for production")
-            placeholders = ", ".join(["?"] * len(cols))
-            ddl = ", ".join(f"{c} {t}" for c, t in _ddl_types(d))
-            connection.execute(f"CREATE OR REPLACE TABLE {table_name} ({ddl})")
-            if rows:
-                connection.executemany(
-                    f"INSERT INTO {table_name} VALUES ({placeholders})", rows)
+                    f"{_MAX_LOCAL_STAGING_ROWS} rows; pass write_staging=lambda d, t: "
+                    f"jdbc_append(d, url, t) for production")
+            view = f"{table_name}__arrow_stage"
+            connection.register(view, table)
+            try:
+                connection.execute(
+                    f'CREATE OR REPLACE TABLE {table_name} AS SELECT * FROM "{view}"')
+            finally:
+                connection.unregister(view)
 
     write_staging(df, staging)
-    insert_cols = cols if insert_missing else None
+    insert_cols = df.columns if insert_missing else None
     if dialect == "merge":
         stmts = [merge_sql(target, staging, key_cols, update_cols, insert_cols)]
     else:
@@ -140,13 +149,3 @@ def merge_upsert(df: DataFrame, connection, target: str, key_cols: list[str],
 
 
 _MAX_LOCAL_STAGING_ROWS = 100_000
-
-_SPARK_TO_SQL = {
-    "bigint": "BIGINT", "int": "INTEGER", "double": "DOUBLE",
-    "string": "VARCHAR", "timestamp": "TIMESTAMP", "date": "DATE",
-    "boolean": "BOOLEAN",
-}
-
-
-def _ddl_types(df: DataFrame) -> list[tuple[str, str]]:
-    return [(name, _SPARK_TO_SQL.get(dtype, "VARCHAR")) for name, dtype in df.dtypes]

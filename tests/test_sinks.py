@@ -2,8 +2,13 @@
 (DuckDB through its DB-API connection — same MERGE the Postgres path
 runs), plus SQL generation."""
 
+import datetime as dt
+import sqlite3
+from decimal import Decimal
+
 import duckdb
 import pytest
+from pyspark.sql import functions as F
 
 from cati_database_feeder_spark.sinks import jdbc
 
@@ -131,3 +136,86 @@ def test_merge_upsert_production_shape_jdbc_staging_real_merge(spark):
     assert rows[1] == ("answer-1", "new")     # matched -> updated
     assert rows[2] == (None, "old")           # untouched
     assert rows[3] == ("answer-3", "new")     # not matched -> inserted
+
+
+def _table_types(con, table):
+    return [(r[0], r[1]) for r in con.execute(f"DESCRIBE {table}").fetchall()]
+
+
+def test_default_staging_keeps_types_and_wall_clock(spark):
+    """The default stage takes its column types from the Arrow schema:
+    decimal, float, smallint, date and array columns keep theirs, and a
+    Spark TIMESTAMP lands as the session's (UTC) wall clock — under a
+    non-UTC DuckDB TimeZone a TIMESTAMPTZ stage would shift it."""
+    con = duckdb.connect()
+    con.execute("SET TimeZone = 'America/New_York'")
+    con.execute("CREATE TABLE typed (id BIGINT, dec DECIMAL(12,2), f FLOAT, x DOUBLE, "
+                "s SMALLINT, i INTEGER, d DATE, ts TIMESTAMP, arr INTEGER[], "
+                "n DECIMAL(5,1))")
+    con.execute("INSERT INTO typed VALUES "
+                "(1, 0, 0, 0, 0, 0, DATE '2000-01-01', TIMESTAMP '2000-01-01', [], 9.9), "
+                "(2, 0, 0, 0, 0, 0, DATE '2000-01-01', TIMESTAMP '2000-01-01', [], 9.9)")
+    updates = spark.sql("""
+        SELECT * FROM VALUES
+          (1L, 1234567890.12BD, 1.5F, 0.1D, -32768S, 7, DATE'2024-01-02',
+           TIMESTAMP'2024-01-02 03:04:05.123456', array(1, 2), CAST(NULL AS DECIMAL(5,1))),
+          (3L, -0.01BD, -2.25F, 1e300D, 32767S, -7, DATE'1999-12-31',
+           TIMESTAMP'1999-12-31 23:59:59', array(3), CAST(NULL AS DECIMAL(5,1)))
+        AS t(id, dec, f, x, s, i, d, ts, arr, n)""")
+    updates = updates.withColumn("dec", F.col("dec").cast("decimal(12,2)"))
+
+    stmts = jdbc.merge_upsert(updates, con, "typed", ["id"],
+                              ["dec", "f", "x", "s", "i", "d", "ts", "arr", "n"],
+                              dialect="update_insert")
+    assert stmts[0].startswith("UPDATE typed")
+
+    assert _table_types(con, "_staging_upsert") == [
+        ("id", "BIGINT"), ("dec", "DECIMAL(12,2)"), ("f", "FLOAT"), ("x", "DOUBLE"),
+        ("s", "SMALLINT"), ("i", "INTEGER"), ("d", "DATE"), ("ts", "TIMESTAMP"),
+        ("arr", "INTEGER[]"), ("n", "DECIMAL(5,1)")]
+    row1 = (1, Decimal("1234567890.12"), 1.5, 0.1, -32768, 7, dt.date(2024, 1, 2),
+            dt.datetime(2024, 1, 2, 3, 4, 5, 123456), [1, 2], None)
+    row3 = (3, Decimal("-0.01"), -2.25, 1e300, 32767, -7, dt.date(1999, 12, 31),
+            dt.datetime(1999, 12, 31, 23, 59, 59), [3], None)
+    assert con.execute("SELECT * FROM _staging_upsert ORDER BY id").fetchall() == [row1, row3]
+
+    got = con.execute("SELECT * FROM typed ORDER BY id").fetchall()
+    assert got[0] == row1                          # matched -> UPDATE
+    assert got[1][0] == 2 and got[1][-1] == Decimal("9.9")   # untouched
+    assert got[2] == row3                          # not matched -> INSERT
+    # the registered Arrow view is gone, the staging table stays
+    assert con.execute("SELECT count(*) FROM duckdb_views() "
+                       "WHERE view_name LIKE '%arrow%'").fetchone()[0] == 0
+
+
+def test_default_staging_cap_raises_before_ddl(spark):
+    con = duckdb.connect()
+    con.execute("CREATE TABLE t (id BIGINT, v BIGINT)")
+    too_many = spark.range(jdbc._MAX_LOCAL_STAGING_ROWS + 1).selectExpr("id", "id AS v")
+    with pytest.raises(ValueError, match=f"capped at {jdbc._MAX_LOCAL_STAGING_ROWS} rows"):
+        jdbc.merge_upsert(too_many, con, "t", ["id"], ["v"], dialect="update_insert")
+    tables = {r[0] for r in con.execute("SELECT table_name FROM duckdb_tables()").fetchall()}
+    assert tables == {"t"}
+    assert con.execute("SELECT count(*) FROM t").fetchone()[0] == 0
+
+
+def test_default_staging_empty_frame(spark):
+    con = duckdb.connect()
+    con.execute("CREATE TABLE t (id BIGINT, v DECIMAL(12,2))")
+    con.execute("INSERT INTO t VALUES (1, 1.25)")
+    empty = spark.createDataFrame([], "id bigint, v decimal(12,2)")
+    jdbc.merge_upsert(empty, con, "t", ["id"], ["v"], dialect="update_insert")
+    assert _table_types(con, "_staging_upsert") == [("id", "BIGINT"), ("v", "DECIMAL(12,2)")]
+    assert con.execute("SELECT count(*) FROM _staging_upsert").fetchone()[0] == 0
+    assert con.execute("SELECT * FROM t").fetchall() == [(1, Decimal("1.25"))]
+
+
+def test_default_staging_needs_register(spark):
+    """A connection that cannot register an Arrow table gets a named
+    error pointing at write_staging=, never a silent row-by-row path."""
+    con = sqlite3.connect(":memory:")
+    con.execute("CREATE TABLE t (id INTEGER, v TEXT)")
+    updates = spark.createDataFrame([(1, "a")], ["id", "v"])
+    with pytest.raises(TypeError, match="write_staging="):
+        jdbc.merge_upsert(updates, con, "t", ["id"], ["v"], dialect="update_insert")
+    assert con.execute("SELECT name FROM sqlite_master").fetchall() == [("t",)]
